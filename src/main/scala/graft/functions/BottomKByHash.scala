@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Deterministic uniform group sampling as a one-pass typed aggregate:
@@ -12,28 +12,28 @@ import org.apache.spark.sql.expressions.Aggregator
   * same set — which is what makes it oracle-checkable), and (c) mergeable:
   * partial bottom-k lists combine associatively, so Spark runs it as a
   * map-side partial + merge aggregate — one pass over 100 TB, O(k) state
-  * per group, versus the sort-the-whole-group window formulation.
+  * per group, versus the sort-the-whole-group window formulation. The
+  * buffer is a [[BoundedK]] array in (hash, id) order, so a row behind
+  * the k-th entry costs one compare.
   */
 class BottomKByHash(k: Int)
-    extends Aggregator[(String, Long), List[(String, Long)], Seq[Long]] {
+    extends Aggregator[(String, Long), Array[(String, Long)], Seq[Long]] {
 
-  override def zero: List[(String, Long)] = Nil
+  private implicit val order: Ordering[(String, Long)] =
+    Ordering.Tuple2(Ordering.String, Ordering.Long)
 
-  private def insert(buf: List[(String, Long)], x: (String, Long)): List[(String, Long)] = {
-    val merged = (x :: buf).sortBy(e => (e._1, e._2))
-    if (merged.size > k) merged.take(k) else merged
-  }
+  override def zero: Array[(String, Long)] = Array.empty
 
-  override def reduce(buf: List[(String, Long)], in: (String, Long)): List[(String, Long)] =
-    insert(buf, in)
+  override def reduce(buf: Array[(String, Long)], in: (String, Long)): Array[(String, Long)] =
+    BoundedK.insert(buf, in, k)
 
-  override def merge(a: List[(String, Long)], b: List[(String, Long)]): List[(String, Long)] =
-    (a ++ b).sortBy(e => (e._1, e._2)).take(k)
+  override def merge(a: Array[(String, Long)], b: Array[(String, Long)]): Array[(String, Long)] =
+    BoundedK.merge(a, b, k)
 
-  override def finish(buf: List[(String, Long)]): Seq[Long] = buf.map(_._2)
+  override def finish(buf: Array[(String, Long)]): Seq[Long] = buf.toSeq.map(_._2)
 
-  override def bufferEncoder: Encoder[List[(String, Long)]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[List[(String, Long)]]()
+  override def bufferEncoder: Encoder[Array[(String, Long)]] =
+    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[(String, Long)]]()
   override def outputEncoder: Encoder[Seq[Long]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
 }

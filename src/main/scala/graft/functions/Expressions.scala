@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftSqlBridge.{toColumn => column, toExpression => expression}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused-loop kernels behind the native expressions — a top-level object so
@@ -117,6 +118,26 @@ object SketchKernels {
     while (b < 60) { if (counts(b) > 0) out |= (1L << b); b += 1 }
     out
   }
+
+  /** [[Expressions.Sketch.fold60]] of the md5 of the string's UTF-8 bytes —
+    * the value of the SQL idiom `conv(substring(md5(s), 1, 15), 16, 10)`
+    * cast to BIGINT, with no hex string, substring, base conversion or cast
+    * per row. The digest runs on the string's own bytes when they sit in a
+    * heap array, and writes into a per-thread buffer. */
+  def md5Fold60(s: UTF8String): Long = {
+    import Expressions.Sketch
+    val d = Sketch.mdLocal.get(); d.reset()
+    s.getBaseObject match {
+      case a: Array[Byte] =>
+        d.update(a, (s.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, s.numBytes())
+      case _ => d.update(s.getBytes)
+    }
+    val out = digestOut.get()
+    d.digest(out, 0, 16)
+    Sketch.fold60(out)
+  }
+  private val digestOut: ThreadLocal[Array[Byte]] =
+    ThreadLocal.withInitial(() => new Array[Byte](16))
 
   private val GramSep = UTF8String.fromString(" ")
 
@@ -249,7 +270,7 @@ object Expressions {
     val MinHashB: Array[Long] =
       lcg(0x13198a2e03707344L).map(x => (x & Long.MaxValue) % MinHashP).take(MaxHashes).toArray
 
-    private val mdLocal: ThreadLocal[java.security.MessageDigest] =
+    private[functions] val mdLocal: ThreadLocal[java.security.MessageDigest] =
       ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
 
     /** md5 of the words `[from, from+size)` joined by a single space —
@@ -301,6 +322,21 @@ object Expressions {
       nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $K.simhash60($c);")
     override protected def withNewChildInternal(newChild: Expression): SimHash60 = copy(newChild)
     override def prettyName: String = "simhash60"
+  }
+
+  /** The 60-bit md5 fold of a string ([[SketchKernels.md5Fold60]]) — the
+    * hash every KMV sketch, content hash and fold-keyed shuffle uses, as one
+    * static call per row. Equal to the oracle-replayable SQL idiom
+    * `CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT)`; null in,
+    * null out. */
+  case class Md5Fold60(child: Expression) extends UnaryExpression {
+    override def dataType: DataType = LongType
+    override def nullSafeEval(input: Any): Any =
+      SketchKernels.md5Fold60(input.asInstanceOf[UTF8String])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, c => s"$K.md5Fold60($c)")
+    override protected def withNewChildInternal(newChild: Expression): Md5Fold60 = copy(newChild)
+    override def prettyName: String = "md5_fold60"
   }
 
   /** Hamming distance between two 64-bit sketches. */
@@ -465,6 +501,8 @@ object Expressions {
     override def prettyName: String = "lsh_bucket"
   }
 
+  /** 60-bit md5 fold of a string column (non-strings are cast first). */
+  def md5Fold60(s: Column): Column = column(Md5Fold60(expression(s.cast(StringType))))
   def simhash60(tokens: Column): Column = column(SimHash60(expression(tokens)))
   def minhashSigFromWords(words: Column, shingleSize: Int, numHashes: Int): Column =
     column(MinHashSigFromWords(expression(words), shingleSize, numHashes))

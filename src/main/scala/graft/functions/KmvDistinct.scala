@@ -21,56 +21,85 @@ import org.apache.spark.sql.expressions.Aggregator
   * The cast of a >2^53 hash to double rounds nearest-even identically on
   * both engines; 255·2^60 is exactly representable, so the division is
   * one IEEE op with identical operands.
+  *
+  * Buffer invariant: a primitive `Array[Long]` holding the k smallest
+  * distinct hashes seen, in ASCENDING order, with no padding — its length
+  * is the number of hashes kept (≤ k), so the last slot of a full buffer
+  * is the k-th smallest, the admission threshold. Per row:
+  *  - a full buffer rejects a hash ≥ its last slot in O(1) — after
+  *    warm-up the overwhelming majority of rows (the admission
+  *    probability of the i-th distinct value is k/i);
+  *  - an admitted hash is placed by binary search (a duplicate stops
+  *    there) and `System.arraycopy`: in place once the buffer is full,
+  *    into a one-longer copy while it fills.
+  * `merge` walks two buffers once, O(k), into a fresh array, so neither
+  * input is changed and both stay usable.
   */
-class KmvDistinct(k: Int) extends Aggregator[Long, List[Long], Double] {
+class KmvDistinct(k: Int) extends Aggregator[Long, Array[Long], Double] {
+  require(k >= 1, s"KMV needs k >= 1, got $k")
 
   /** 2^60 as an exact double — hashes are 60-bit folds. */
   private val Norm = 1152921504606846976L.toDouble
 
-  /** Buffer invariant: the k smallest distinct hashes in DESCENDING
-    * order, so `head` is the k-th smallest — the admission threshold.
-    * That makes the hot path O(1): once the buffer is full, a row whose
-    * hash ≥ head (the overwhelming majority after warm-up — the
-    * admission probability of the i-th distinct value is k/i) is
-    * rejected without touching the list. Only admitted hashes pay the
-    * O(k) dedup + re-sort. */
-  override def zero: List[Long] = Nil
+  override def zero: Array[Long] = Array.emptyLongArray
 
-  override def reduce(buf: List[Long], h: Long): List[Long] =
-    if (buf.nonEmpty && buf.size >= k && h >= buf.head) buf // fast reject
-    else if (buf.contains(h)) buf
-    else {
-      val merged = (h :: buf).sortWith(_ > _)
-      if (merged.size > k) merged.tail else merged
+  override def reduce(buf: Array[Long], h: Long): Array[Long] = {
+    val n = buf.length
+    if (n == k && h >= buf(n - 1)) return buf // fast reject
+    val at = java.util.Arrays.binarySearch(buf, h)
+    if (at >= 0) return buf // already kept
+    val ins = -at - 1
+    if (n < k) {
+      val out = new Array[Long](n + 1)
+      System.arraycopy(buf, 0, out, 0, ins)
+      System.arraycopy(buf, ins, out, ins + 1, n - ins)
+      out(ins) = h
+      out
+    } else { // full: shift the tail right, dropping the old k-th smallest
+      System.arraycopy(buf, ins, buf, ins + 1, n - 1 - ins)
+      buf(ins) = h
+      buf
     }
+  }
 
-  override def merge(a: List[Long], b: List[Long]): List[Long] =
-    (a ++ b).distinct.sortWith(_ > _).takeRight(k)
+  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+    val out = new Array[Long](math.min(k, a.length + b.length))
+    var i = 0; var j = 0; var n = 0
+    while (n < out.length && (i < a.length || j < b.length)) {
+      val x =
+        if (j == b.length || (i < a.length && a(i) < b(j))) { i += 1; a(i - 1) }
+        else if (i == a.length || b(j) < a(i)) { j += 1; b(j - 1) }
+        else { i += 1; j += 1; a(i - 1) } // in both: keep one
+      out(n) = x; n += 1
+    }
+    if (n == out.length) out else java.util.Arrays.copyOf(out, n)
+  }
 
-  override def finish(buf: List[Long]): Double =
-    if (buf.size < k) buf.size.toDouble
-    else (k - 1).toDouble * Norm / buf.head.toDouble
+  override def finish(buf: Array[Long]): Double =
+    if (buf.length < k) buf.length.toDouble
+    else (k - 1).toDouble * Norm / buf(k - 1).toDouble
 
-  override def bufferEncoder: Encoder[List[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[List[Long]]()
+  override def bufferEncoder: Encoder[Array[Long]] =
+    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
   override def outputEncoder: Encoder[Double] =
     org.apache.spark.sql.Encoders.scalaDouble
 }
 
 /** [[KmvDistinct]]'s state as the RESULT: the k smallest distinct hashes,
-  * ascending. The raw sketch (not just its cardinality estimate) is what
+  * ascending — the buffer itself, which [[KmvDistinct]] already keeps in
+  * that order. The raw sketch (not just its cardinality estimate) is what
   * set-OPERATION estimators need — two groups' sketches merge into the
   * union's sketch, and the fraction of merged values present in both
   * inputs estimates Jaccard (the theta-sketch intersection rule). Same
   * O(k) mergeable buffer; the output is a pure function of the value set,
   * so it is oracle-hash-checkable like the estimate. */
-class KmvSketch(k: Int) extends Aggregator[Long, List[Long], Seq[Long]] {
+class KmvSketch(k: Int) extends Aggregator[Long, Array[Long], Seq[Long]] {
   private val inner = new KmvDistinct(k)
-  override def zero: List[Long] = inner.zero
-  override def reduce(buf: List[Long], h: Long): List[Long] = inner.reduce(buf, h)
-  override def merge(a: List[Long], b: List[Long]): List[Long] = inner.merge(a, b)
-  override def finish(buf: List[Long]): Seq[Long] = buf.reverse // ascending
-  override def bufferEncoder: Encoder[List[Long]] = inner.bufferEncoder
+  override def zero: Array[Long] = inner.zero
+  override def reduce(buf: Array[Long], h: Long): Array[Long] = inner.reduce(buf, h)
+  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = inner.merge(a, b)
+  override def finish(buf: Array[Long]): Seq[Long] = buf.toSeq
+  override def bufferEncoder: Encoder[Array[Long]] = inner.bufferEncoder
   override def outputEncoder: Encoder[Seq[Long]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
 }

@@ -450,8 +450,7 @@ object Pipeline {
     val keyed = docs
       .select($"doc_id", explode(sequence(lit(0), lit(epochs - 1))).as("epoch"))
       .withColumn("skey",
-        conv(substring(md5(concat_ws("|", lit("epoch"), $"epoch", $"doc_id")), 1, 15), 16, 10)
-          .cast("long"))
+        graft.functions.Expressions.md5Fold60(concat_ws("|", lit("epoch"), $"epoch", $"doc_id")))
     graft.plans.ScalableNtile.runningTotal(keyed, lit(1L),
         Seq(col("epoch"), col("skey"), col("doc_id")), "grank")
       .select($"epoch".cast("long").as("epoch"),
@@ -794,8 +793,7 @@ object Pipeline {
       threshold: Double = 0.5): DataFrame = {
     import s.implicits._
     def foldOf(id: org.apache.spark.sql.Column) =
-      pmod(conv(substring(md5(concat_ws("|", lit("fold"), id)), 1, 15), 16, 10)
-        .cast("long"), lit(k.toLong))
+      pmod(graft.functions.Expressions.md5Fold60(concat_ws("|", lit("fold"), id)), lit(k.toLong))
     Dedup.minhashPairs(s, d, threshold)
       .select(foldOf($"doc_a").as("fa"), foldOf($"doc_b").as("fb"))
       .select(least($"fa", $"fb").as("fold_lo"), greatest($"fa", $"fb").as("fold_hi"))

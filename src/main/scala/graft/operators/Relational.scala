@@ -490,13 +490,19 @@ object Relational {
 
   /** KMV distinct-count sketch ([[graft.functions.KmvDistinct]]): per
     * return flag, the sketch estimate AND the exact distinct count for
-    * part and order keys. The sketch state is the 256 smallest md5-fold
-    * hashes — O(k) mergeable, one pass, map-side partials — and because
-    * the fold is the replayable [[graft.functions.Expressions.Sketch]]
-    * scheme, the ESTIMATE ITSELF hash-matches the oracle (q21's HLL can
-    * only be tolerance-gated; this is the fully-checkable sketch). */
+    * part and order keys. Each key hashes through one native kernel,
+    * [[graft.functions.Expressions.Md5Fold60]]: the md5 of `"kmv|<key>"`
+    * folded to its first 60 bits, computed on the string's bytes with no
+    * hex string in between. The sketch state is the 256 smallest of those
+    * hashes as a sorted primitive array — O(k) mergeable, one pass,
+    * map-side partials, O(1) per rejected row. Because the fold is the
+    * replayable [[graft.functions.Expressions.Sketch]] scheme (the oracle
+    * computes it with `md5` and hex arithmetic), the ESTIMATE ITSELF
+    * hash-matches the oracle (q21's HLL can only be tolerance-gated; this
+    * is the fully-checkable sketch). */
   def q38KmvDistinct(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
+    import graft.functions.Expressions.md5Fold60
     val kmv = udaf(new graft.functions.KmvDistinct(256),
       org.apache.spark.sql.Encoders.scalaLong)
     val li = lineitem(s, d)
@@ -508,10 +514,8 @@ object Relational {
     // validation anyway
     val sketches = li
       .select($"l_returnflag",
-        conv(substring(md5(concat_ws("|", lit("kmv"), $"l_partkey")), 1, 15), 16, 10)
-          .cast("long").as("hp"),
-        conv(substring(md5(concat_ws("|", lit("kmv"), $"l_orderkey")), 1, 15), 16, 10)
-          .cast("long").as("ho"))
+        md5Fold60(concat_ws("|", lit("kmv"), $"l_partkey")).as("hp"),
+        md5Fold60(concat_ws("|", lit("kmv"), $"l_orderkey")).as("ho"))
       .groupBy($"l_returnflag")
       .agg(round(kmv($"hp"), 4).as("kmv_parts"),
            round(kmv($"ho"), 4).as("kmv_orders"))

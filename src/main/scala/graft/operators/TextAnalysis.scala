@@ -148,16 +148,16 @@ object TextAnalysis {
   }
 
   /** Document fingerprints: canonical md5 (exact-dup key) + a 60-bit
-    * content hash (md5 fold — same construction as
-    * [[graft.functions.Expressions.Sketch.fold60]], via `conv`, so the
-    * oracle can replay it) + simhash (near-dup sketch). */
+    * content hash ([[graft.functions.Expressions.md5Fold60]], the oracle
+    * replays it with `md5` and hex arithmetic) + simhash (near-dup
+    * sketch). */
   def fingerprints(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.functions.Expressions
     documents(s, d)
       .select($"doc_id",
         md5(canonical($"text")).as("md5_canonical"),
-        conv(substring(md5(canonical($"text")), 1, 15), 16, 10).cast("long").as("content_hash"),
+        Expressions.md5Fold60(canonical($"text")).as("content_hash"),
         Expressions.simhash60(wsTokens(canonical($"text"))).as("simhash"))
       .orderBy($"doc_id")
   }
@@ -912,8 +912,7 @@ object TextAnalysis {
       .select(explode(wsTokens(canonical($"text"))).as("token"))
       .filter($"token" =!= "")
     val ranked = toks
-      .select(conv(substring(md5(concat_ws("|", lit("hll"), $"token")), 1, 15), 16, 10)
-        .cast("long").as("h"))
+      .select(graft.functions.Expressions.md5Fold60(concat_ws("|", lit("hll"), $"token")).as("h"))
       .select(pmod($"h", lit(64L)).as("j"), expr("h div 64").as("rest"))
       .select($"j", when($"rest" === 0L, 55L)
         .otherwise(lit(55L) - length(bin($"rest"))).as("rank"))

@@ -51,6 +51,42 @@ class ApproxSpec extends AnyFunSuite {
     assert(oneP == manyP, s"KMV not merge-invariant: $oneP vs $manyP")
   }
 
+  test("md5Fold60 kernel equals the SQL md5-fold idiom, interpreted and generated") {
+    import spark.implicits._
+    import graft.functions.Expressions
+    val li = Tables.lineitem(spark, sf)
+    val keys = li.select($"l_partkey".cast("string").as("s"))
+      .union(li.select($"l_orderkey".cast("string").as("s")))
+      .distinct()
+    val keyed = keys.select(concat_ws("|", lit("kmv"), $"s").as("s"))
+    val edge = Seq(Some(""), Some("grüße 世界 🚀"), Some("kmv|"), None).toDF("s")
+    val all = keys.union(keyed).union(edge)
+    val idiom = conv(substring(md5($"s"), 1, 15), 16, 10).cast("long")
+    // interpreted evaluation is only reached if the optimizer keeps the
+    // literal rows out of a LocalRelation and codegen is off end to end
+    val modes = Seq(
+      "CODEGEN_ONLY" -> Map("spark.sql.codegen.wholeStage" -> "true"),
+      "NO_CODEGEN" -> Map("spark.sql.codegen.wholeStage" -> "false"))
+    modes.foreach { case (mode, extra) =>
+      val conf = extra ++ Map("spark.sql.codegen.factoryMode" -> mode,
+        "spark.sql.optimizer.excludedRules" ->
+          "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val both = all.select($"s", Expressions.md5Fold60($"s").as("kernel"), idiom.as("sql"))
+        val rows = both.collect()
+        assert(rows.length > 20000, s"$mode: only ${rows.length} strings")
+        val bad = rows.filter(r => r.get(1) != r.get(2))
+        assert(bad.isEmpty, s"$mode: kernel differs from the idiom on ${bad.take(5).mkString(", ")}")
+        assert(rows.filter(_.isNullAt(0)).forall(_.isNullAt(1)), s"$mode: null did not map to null")
+        assert(rows.exists(r => r.getString(0) == "grüße 世界 🚀" && !r.isNullAt(1)))
+        val gen = org.apache.spark.sql.execution.debug.codegenString(both.queryExecution.executedPlan)
+        assert(gen.contains("SketchKernels.md5Fold60") == (mode == "CODEGEN_ONLY"),
+          s"$mode: generated code and mode disagree")
+      } finally conf.keys.foreach(spark.conf.unset)
+    }
+  }
+
   test("approx_count_distinct within 5% of exact per group") {
     import spark.implicits._
     val both = Tables.lineitem(spark, sf)

@@ -144,36 +144,93 @@ object MoneyFixedPointProps extends Properties("MoneyFixedPoint") {
 
 /** [[graft.functions.KmvDistinct]] laws: the one-pass mergeable aggregate
   * must behave like the mathematical KMV sketch no matter how the input
-  * is partitioned or ordered. */
+  * is partitioned or ordered. Buffers are compared through one normalized
+  * view, the ascending k-smallest sequence, so no law depends on how the
+  * buffer stores it. */
 object KmvProps extends Properties("KmvDistinct") {
   import graft.functions.KmvDistinct
 
-  private val hashes = Gen.listOf(Gen.choose(1L, 1L << 60))
-  private def run(agg: KmvDistinct, xs: Seq[Long]): List[Long] =
+  private val K = 16
+  /** Wide 60-bit hashes mixed with a narrow range, so duplicates occur. */
+  private val hashes = Gen.listOf(Gen.frequency(
+    4 -> Gen.choose(1L, 1L << 60), 1 -> Gen.choose(1L, 40L)))
+  private def view(buf: Array[Long]): Seq[Long] = buf.toSeq
+  private def run(agg: KmvDistinct, xs: Seq[Long]): Array[Long] =
     xs.foldLeft(agg.zero)(agg.reduce)
+  private def split(xs: List[Long], cutRaw: Int) =
+    xs.splitAt(if (xs.isEmpty) 0 else cutRaw % (xs.size + 1))
 
   property("merge of any split equals one-pass reduce") =
     forAll(hashes, Gen.choose(0, 100)) { (xs, cutRaw) =>
-      val agg = new KmvDistinct(16)
-      val cut = if (xs.isEmpty) 0 else cutRaw % (xs.size + 1)
-      val (a, b) = xs.splitAt(cut)
-      agg.merge(run(agg, a), run(agg, b)) == run(agg, xs)
+      val agg = new KmvDistinct(K)
+      val (a, b) = split(xs, cutRaw)
+      view(agg.merge(run(agg, a), run(agg, b))) == view(run(agg, xs))
     }
 
   property("input order never changes the sketch") = forAll(hashes) { xs =>
-    val agg = new KmvDistinct(16)
-    run(agg, xs) == run(agg, scala.util.Random.shuffle(xs))
+    val agg = new KmvDistinct(K)
+    view(run(agg, xs)) == view(run(agg, scala.util.Random.shuffle(xs)))
   }
 
   property("below k the estimate is the exact distinct count") =
-    forAll(Gen.listOf(Gen.choose(1L, 1L << 60)).map(_.take(15))) { xs =>
-      val agg = new KmvDistinct(16)
+    forAll(Gen.listOf(Gen.choose(1L, 1L << 60)).map(_.take(K - 1))) { xs =>
+      val agg = new KmvDistinct(K)
       agg.finish(run(agg, xs)) == xs.distinct.size.toDouble
     }
 
-  property("buffer is the k smallest distinct hashes, descending") =
+  property("buffer is the k smallest distinct hashes, ascending") =
     forAll(hashes) { xs =>
-      val agg = new KmvDistinct(16)
-      run(agg, xs) == xs.distinct.sorted.take(16).reverse
+      val agg = new KmvDistinct(K)
+      view(run(agg, xs)) == xs.distinct.sorted.take(K)
     }
+
+  property("merging with zero is the identity") = forAll(hashes) { xs =>
+    val agg = new KmvDistinct(K)
+    val r = run(agg, xs)
+    view(agg.merge(agg.zero, r)) == view(r) && view(agg.merge(r, agg.zero)) == view(r)
+  }
+
+  property("a buffer that was merged into stays correct when reused") =
+    forAll(hashes, hashes, Gen.choose(0, 100)) { (xs, more, cutRaw) =>
+      val agg = new KmvDistinct(K)
+      val (a, b) = split(xs, cutRaw)
+      val (ra, rb) = (run(agg, a), run(agg, b))
+      val merged = agg.merge(ra, rb)
+      // both the merge's inputs and its result keep absorbing rows correctly
+      view(more.foldLeft(ra)(agg.reduce)) == view(run(agg, a ++ more)) &&
+        view(more.foldLeft(rb)(agg.reduce)) == view(run(agg, b ++ more)) &&
+        view(more.foldLeft(merged)(agg.reduce)) == view(run(agg, xs ++ more))
+    }
+}
+
+/** [[graft.functions.TopKByScore]] laws: whatever the split, the kept
+  * entries are the first k of the input sorted by (score desc, id asc).
+  * Scores include ties, NaN and both zeros; entries are compared by their
+  * score's bits so NaN and -0.0 compare exactly. */
+object TopKProps extends Properties("TopKByScore") {
+  import graft.functions.TopKByScore
+
+  private val K = 8
+  private val entries = Gen.listOf(Gen.zip(
+    Gen.frequency(6 -> Gen.choose(-3, 3).map(_.toDouble),
+      1 -> Gen.oneOf(Double.NaN, -0.0, 0.0), 2 -> Gen.choose(-1e6, 1e6)),
+    Gen.choose(0L, 20L)))
+  private def bits(xs: Iterable[(Double, Long)]) =
+    xs.map { case (s, id) => (java.lang.Double.doubleToRawLongBits(s), id) }.toSeq
+  private def run(agg: TopKByScore, xs: Seq[(Double, Long)]) =
+    xs.foldLeft(agg.zero)(agg.reduce)
+
+  property("merge of any split equals one-pass reduce, and both equal sort-then-take") =
+    forAll(entries, Gen.choose(0, 100)) { (xs, cutRaw) =>
+      val agg = new TopKByScore(K)
+      val (a, b) = xs.splitAt(if (xs.isEmpty) 0 else cutRaw % (xs.size + 1))
+      val expected = bits(xs.sortBy(e => (-e._1, e._2)).take(K))
+      bits(agg.merge(run(agg, a), run(agg, b))) == expected && bits(run(agg, xs)) == expected
+    }
+
+  property("finish reports (id, score) best first") = forAll(entries) { xs =>
+    val agg = new TopKByScore(K)
+    bits(agg.finish(run(agg, xs)).map(_.swap)) ==
+      bits(xs.sortBy(e => (-e._1, e._2)).take(K))
+  }
 }
