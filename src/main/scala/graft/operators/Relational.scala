@@ -511,7 +511,9 @@ object Relational {
     // Spark Expand every input row once per distinct spec (3× the rows
     // through a SortAggregate — measured 2.5× slower than two clean
     // passes), and the exact counts exist only as the sketch's on-query
-    // validation anyway
+    // validation anyway. The hint makes the 3-row sketch side the build
+    // side in every run; unhinted, AQE broadcasts whichever pass finishes
+    // first.
     val sketches = li
       .select($"l_returnflag",
         md5Fold60(concat_ws("|", lit("kmv"), $"l_partkey")).as("hp"),
@@ -522,7 +524,7 @@ object Relational {
     val exact = li.groupBy($"l_returnflag")
       .agg(countDistinct($"l_partkey").as("exact_parts"),
            countDistinct($"l_orderkey").as("exact_orders"))
-    sketches.join(exact, "l_returnflag")
+    broadcast(sketches).join(exact, "l_returnflag")
       .select($"l_returnflag", $"kmv_parts", $"kmv_orders",
               $"exact_parts", $"exact_orders")
       .orderBy($"l_returnflag")

@@ -157,12 +157,29 @@ object Similarity {
     * verdict) — 2048 × 64 doubles ≈ 1 MB of literals stays comfortably
     * inside codegen limits while covering every real quantizer here. */
   private[graft] val MaxLiteralCentroids = 2048
+  /** Upper sanity bound on any centroid table: past it the frame is not a
+    * quantizer (a corpus passed by mistake) and fails here, loudly, instead
+    * of later in the broadcast join as a size or memory error. */
+  private[graft] val MaxCentroids = 65536
+
+  /** The first `MaxLiteralCentroids + 1` centroid rows (more than
+    * `MaxLiteralCentroids` selects the join form), after checking the
+    * table against [[MaxCentroids]]. */
+  private def localCentroids(cent: DataFrame): Array[org.apache.spark.sql.Row] = {
+    val local = cent.limit(MaxLiteralCentroids + 1).collect()
+    if (local.length > MaxLiteralCentroids) {
+      val rows = cent.limit(MaxCentroids + 1).count()
+      require(rows <= MaxCentroids,
+        s"centroid table has more than $MaxCentroids rows: not a quantizer table")
+    }
+    local
+  }
 
   private[graft] def coarseAssign(vecs: DataFrame, cent: DataFrame): DataFrame = {
     // localization is bounded: a centroid table is nLists rows by
     // construction; a larger table switches to the broadcast-join
     // assignment (same values — GraphAnnSpec pins the equivalence)
-    val local = cent.limit(MaxLiteralCentroids + 1).collect()
+    val local = localCentroids(cent)
     if (local.length <= MaxLiteralCentroids)
       coarseAssignLit(vecs, local.map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq)
     else coarseAssignJoin(vecs, cent)
@@ -193,7 +210,7 @@ object Similarity {
   private[graft] def coarseAssignTopN(vecs: DataFrame, cent: DataFrame,
       n: Int): DataFrame = {
     import vecs.sparkSession.implicits._
-    val local = cent.limit(MaxLiteralCentroids + 1).collect()
+    val local = localCentroids(cent)
     if (local.length > MaxLiteralCentroids)
       return coarseAssignTopNJoin(vecs, cent, n)
     val centArr = array(local.map(r => (r.getLong(0), r.getSeq[Double](1)))
@@ -955,7 +972,7 @@ object Similarity {
   private[graft] def graphMedoids(vecs: DataFrame,
       centroids: DataFrame): DataFrame = {
     import vecs.sparkSession.implicits._
-    val local = centroids.limit(MaxLiteralCentroids + 1).collect()
+    val local = localCentroids(centroids)
     if (local.length > MaxLiteralCentroids)
       return graphMedoidsJoin(vecs, centroids)
     val centArr = array(local.map(r => (r.getLong(0), r.getSeq[Double](1)))

@@ -2,11 +2,13 @@ package graft.sources.eth
 
 import java.io.{BufferedReader, FileReader}
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, NoSuchFileException, Path, Paths}
+import java.nio.file.attribute.{BasicFileAttributes, FileTime}
 import java.security.MessageDigest
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
 
-import scala.collection.mutable
-
+import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 /** Node-facing client abstraction — the analogue of the reference's web3j
@@ -84,39 +86,18 @@ object EthClient {
   * 1 + n_tx RPC round trips per block (`EthereumLogLazyIterator.java:39`).
   * Account-state calls (balance/nonce/code) are deterministic functions of
   * the address so UDF results are stable for tests.
+  *
+  * The tip, hash → number and per-block timestamp lookups are served by the
+  * process-wide [[FixtureChainIndex]] of the chain dir, so every client of
+  * one dir (one per scan builder, reader factory or UDF closure) shares a
+  * single load of each file. Block scans ([[blocks]]) read the chunk files
+  * directly and cache nothing.
   */
 final class FixtureChainClient(chainDir: String) extends EthClient {
   import FixtureChainClient._
 
-  /** Chain tip, re-read when `meta.txt` changes (mtime-validated cache):
-    * a fixture dir can grow or be rewritten under a tip-following stream —
-    * e.g. the reorg spec — and must then behave like a live chain, not a
-    * snapshot pinned at first read. */
-  @transient private var tipCache: (java.nio.file.attribute.FileTime, Long) = _
-  private def tip: Long = {
-    val p = Paths.get(chainDir, "meta.txt")
-    val mt = Files.getLastModifiedTime(p)
-    if (tipCache == null || tipCache._1 != mt) {
-      val meta = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      val t = meta.linesIterator.collectFirst { case l if l.startsWith("tip=") => l.drop(4).toLong }
-        .getOrElse(throw new IllegalStateException(s"no tip= in $chainDir/meta.txt"))
-      tipCache = (mt, t)
-    }
-    tipCache._2
-  }
-
-  @transient private lazy val hashIndex: Map[String, Long] = {
-    val m = mutable.HashMap.empty[String, Long]
-    val p = Paths.get(chainDir, "hash-index.txt")
-    if (Files.exists(p)) {
-      val it = Files.lines(p)
-      try it.forEach { l =>
-        val sp = l.indexOf(' ')
-        if (sp > 0) m.put(l.substring(0, sp), l.substring(sp + 1).toLong)
-      } finally it.close()
-    }
-    m.toMap
-  }
+  @transient private lazy val index = FixtureChainIndex(chainDir)
+  private def tip: Long = index.tip
 
   override def blockNumber(): Long = tip
 
@@ -151,22 +132,12 @@ final class FixtureChainClient(chainDir: String) extends EthClient {
     }
   }
 
-  override def blockNumberByHash(hash: String): Option[Long] = hashIndex.get(hash)
+  override def blockNumberByHash(hash: String): Option[Long] = index.numberOf(hash)
 
   override def timestampOf(blockNumber: Long): Long = {
-    // Planning-time point probe (timestamp binary search): blocks are laid
-    // out sequentially, one per line, so parse exactly the one line needed
-    // instead of all 1024 blocks of the chunk per probe.
     if (blockNumber < 1 || blockNumber > tip)
       throw new IllegalStateException(s"no block $blockNumber")
-    val chunkStart = ((blockNumber - 1) / BlocksPerFile) * BlocksPerFile + 1
-    val lines = chunkLines(chunkStart)
-    val idx = (blockNumber - chunkStart).toInt
-    if (idx >= lines.size) throw new IllegalStateException(s"no block $blockNumber")
-    val b = parseBlock(lines(idx), fullTx = false)
-    if (b.number == blockNumber) b.timestamp
-    else lines.iterator.map(parseBlock(_, fullTx = false))
-      .collectFirst { case blk if blk.number == blockNumber => blk.timestamp }
+    index.timestampOf(blockNumber)
       .getOrElse(throw new IllegalStateException(s"no block $blockNumber"))
   }
 
@@ -255,5 +226,134 @@ object FixtureChainClient {
       timestamp = j.get("timestamp").asLong(),
       uncles = strs(j.get("uncles")),
       transactions = txs.result())
+  }
+}
+
+/** Process-wide lookup index over one fixture chain dir: the tip (from
+  * `meta.txt`), `block_hash → number` (from `hash-index.txt`, loaded whole on
+  * the first hash lookup) and, per 1024-block chunk file, a number-sorted
+  * `number → timestamp` pair of `Array[Long]`s, built the first time a probe
+  * touches that chunk. The planner's hash resolution, the timestamp binary
+  * search and the pushed `min/max(block_timestamp)` aggregate read it, so
+  * they cost a map or array lookup instead of a file read per query or per
+  * probe (the coordinator-side metadata of `EthereumMetadata.java:200-229`).
+  *
+  * Every entry is keyed by its file's `(fileKey, lastModifiedTime, size)`,
+  * read with one `readAttributes` call per lookup: a rewritten file (a reorg
+  * or a growing tip under a tip-following stream, [[EthFixtures.writeRawChain]])
+  * is reloaded on the next lookup, and a deleted one reads as absent. The key
+  * is read before the file, so a load that races a writer is replaced on the
+  * following lookup rather than kept.
+  *
+  * Retained memory per block, from object layouts with compressed oops:
+  * about 180 B for the hash map entry (a 66-char key ~112 B, a boxed number
+  * 16 B, a map node 32 B, ~17 B of table) and 16 B for the chunk arrays.
+  * Indexes live for the JVM, one per distinct dir, and are never evicted.
+  */
+private[eth] final class FixtureChainIndex private (dir: String) {
+  import FixtureChainIndex._
+
+  /** Files loaded so far (meta, hash index and chunk loads, reloads included). */
+  private[eth] val loads = new AtomicLong
+
+  /** One file-derived value, reloaded when the file's stamp changes. */
+  private final class Slot[A](path: Path, load: Path => A) {
+    @volatile private var cur: (Stamp, A) = _
+    /** The value for the file as it is now; None when the file is absent. */
+    def get: Option[A] = stamp(path).map { s =>
+      val c = cur
+      if (c != null && c._1 == s) c._2
+      else synchronized {
+        if (cur == null || cur._1 != s) { cur = (s, load(path)); loads.incrementAndGet() }
+        cur._2
+      }
+    }
+  }
+
+  private val meta = new Slot(Paths.get(dir, "meta.txt"), readTip)
+  private val hashes = new Slot(Paths.get(dir, "hash-index.txt"), readHashes)
+  private val chunks = new ConcurrentHashMap[Long, Slot[Chunk]]
+
+  def tip: Long = meta.get.getOrElse(throw new NoSuchFileException(s"$dir/meta.txt"))
+
+  def numberOf(hash: String): Option[Long] =
+    hashes.get.flatMap(m => Option(m.get(hash))).map(_.longValue)
+
+  /** Timestamp of block `n`; None when its chunk file or its line is absent. */
+  def timestampOf(n: Long): Option[Long] = {
+    val start = ((n - 1) / FixtureChainClient.BlocksPerFile) * FixtureChainClient.BlocksPerFile + 1
+    chunks.computeIfAbsent(start, s =>
+      new Slot(Paths.get(dir, "chain", f"blocks-$s%07d.jsonl"), readChunk)).get.flatMap { c =>
+      val i = java.util.Arrays.binarySearch(c.numbers, n)
+      if (i >= 0) Some(c.timestamps(i)) else None
+    }
+  }
+}
+
+private[eth] object FixtureChainIndex {
+  private val byDir = new ConcurrentHashMap[String, FixtureChainIndex]
+
+  /** The index of `dir`, created on first use; one per normalized path. */
+  def apply(dir: String): FixtureChainIndex =
+    byDir.computeIfAbsent(Paths.get(dir).toAbsolutePath.normalize.toString,
+      d => new FixtureChainIndex(d))
+
+  private final case class Stamp(key: AnyRef, modified: FileTime, size: Long)
+
+  private def stamp(p: Path): Option[Stamp] =
+    try {
+      val a = Files.readAttributes(p, classOf[BasicFileAttributes])
+      Some(Stamp(a.fileKey, a.lastModifiedTime, a.size))
+    } catch { case _: NoSuchFileException => None }
+
+  private final class Chunk(val numbers: Array[Long], val timestamps: Array[Long])
+
+  private def eachLine(p: Path)(f: String => Unit): Unit = {
+    val r = Files.newBufferedReader(p)
+    try { var l = r.readLine(); while (l != null) { f(l); l = r.readLine() } } finally r.close()
+  }
+
+  private def readTip(p: Path): Long =
+    new String(Files.readAllBytes(p), StandardCharsets.UTF_8).linesIterator
+      .collectFirst { case l if l.startsWith("tip=") => l.drop(4).toLong }
+      .getOrElse(throw new IllegalStateException(s"no tip= in $p"))
+
+  private def readHashes(p: Path): java.util.HashMap[String, java.lang.Long] = {
+    val m = new java.util.HashMap[String, java.lang.Long]
+    eachLine(p) { l =>
+      val sp = l.indexOf(' ')
+      if (sp > 0) m.put(l.substring(0, sp), l.substring(sp + 1).toLong)
+    }
+    m
+  }
+
+  private val json = new JsonFactory
+
+  /** (number, timestamp) of every line, sorted by number. Each line is
+    * tokenized only up to `timestamp`, which [[EthFixtures]] writes before
+    * the transactions: no tree, no [[EthBlockData]]. */
+  private def readChunk(p: Path): Chunk = {
+    val pairs = Array.newBuilder[(Long, Long)]
+    eachLine(p) { l =>
+      val jp = json.createParser(l)
+      try {
+        var number, ts = -1L
+        jp.nextToken()
+        while ((number < 0 || ts < 0) && jp.nextToken() == JsonToken.FIELD_NAME) {
+          val field = jp.currentName()
+          jp.nextToken()
+          field match {
+            case "number" => number = jp.getLongValue
+            case "timestamp" => ts = jp.getLongValue
+            case _ => jp.skipChildren()
+          }
+        }
+        if (number < 0 || ts < 0)
+          throw new IllegalStateException(s"block line without number/timestamp in $p")
+        pairs += ((number, ts))
+      } finally jp.close()
+    }
+    val sorted = pairs.result().sortBy(_._1)
+    new Chunk(sorted.map(_._1), sorted.map(_._2))
   }
 }

@@ -51,6 +51,21 @@ class ApproxSpec extends AnyFunSuite {
     assert(oneP == manyP, s"KMV not merge-invariant: $oneP vs $manyP")
   }
 
+  test("q38 broadcasts its 3-row sketch side in the final adaptive plan, run after run") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val plans = new AdaptiveSparkPlanHelper {}
+    (1 to 3).foreach { _ =>
+      val df = Relational.q38KmvDistinct(spark, sf)
+      df.collect()
+      val sides = plans.collect(df.queryExecution.executedPlan) {
+        case j: BroadcastHashJoinExec => j.buildSide
+      }
+      assert(sides == Seq(BuildLeft), df.queryExecution.executedPlan.toString)
+    }
+  }
+
   test("md5Fold60 kernel equals the SQL md5-fold idiom, interpreted and generated") {
     import spark.implicits._
     import graft.functions.Expressions

@@ -119,6 +119,20 @@ class GraphAnnSpec extends AnyFunSuite {
         == rows(Similarity.graphMedoidsJoin(vecs, centBig), "list_id", "entry_id"))
   }
 
+  test("a centroid table past 65536 rows fails loudly in all three assignments") {
+    import spark.implicits._
+    val vecs = Seq((1L, Seq(1.0, 0.0))).toDF("vec_id", "v")
+    val notQuantizer = spark.range(Similarity.MaxCentroids + 1L)
+      .select($"id".as("list_id"), array(lit(1.0), lit(0.0)).as("cv"))
+    Seq[() => Any](
+      () => Similarity.coarseAssign(vecs, notQuantizer),
+      () => Similarity.coarseAssignTopN(vecs, notQuantizer, 2),
+      () => Similarity.graphMedoids(vecs, notQuantizer)).foreach { f =>
+      val e = intercept[IllegalArgumentException](f())
+      assert(e.getMessage.contains("not a quantizer table"), e.getMessage)
+    }
+  }
+
   test("beam traversal visits no more than the budgeted candidate count") {
     import spark.implicits._
     // the scored-candidate budget claimed in the scaladoc: entries +
